@@ -12,13 +12,17 @@ import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 
 import graft.format.{ColumnDecoder, ColumnFileReader, CorruptColumnFileException}
 
-/** Vectorized scan path: decodes chunk columns straight into on-heap
-  * column vectors (Parquet-vectorized-reader parity). Eligible when the
-  * projected schema is flat atomic types — the factory falls back to the
-  * row reader otherwise. Filters still evaluate in pass 1 over the raw
-  * cells (late materialization + chunk skip preserved); survivors are
-  * then written batch-at-a-time, so whole-stage codegen above the scan
-  * consumes columnar input without per-row boxing or UnsafeRow copies.
+/** The columnfile scan path: decodes chunk columns straight into
+  * on-heap column vectors (Parquet-vectorized-reader parity) for every
+  * projection — atomics, decimals, variants, structs, and arbitrarily
+  * nested arrays/maps (framed cells parse straight into the vector's
+  * child element vectors, recursively). Types the cell codec cannot
+  * store (void, intervals) read as all-NULL vectors; a present cell of
+  * one fails like `CellCodec.decode`. Filters evaluate in pass 1 over
+  * the raw cells (late materialization + chunk skip, reference:
+  * src/columnfile-select.cc:90-176); survivors are then written
+  * batch-at-a-time, so whole-stage codegen above the scan consumes
+  * columnar input without per-row boxing or UnsafeRow copies.
   */
 object ColumnFileColumnarReader {
 
@@ -40,47 +44,6 @@ object ColumnFileColumnarReader {
       throw new UnsupportedOperationException("dictionary holds binary values")
     override def decodeToDouble(id: Int): Double =
       throw new UnsupportedOperationException("dictionary holds binary values")
-  }
-
-  /** Every projection vectorizes except variant ELEMENTS inside
-    * collections: atomics, decimals, variants-as-columns, structs, and
-    * arbitrarily nested arrays/maps (framed cells parse straight into
-    * the vector's child element vectors, recursively).
-    */
-  def vectorizable(schema: StructType): Boolean =
-    schema.fields.forall(f => vectorizableType(f.dataType))
-
-  private def vectorizableType(dt: DataType): Boolean = dt match {
-    case IntegerType | LongType | ShortType | ByteType | BooleanType |
-         FloatType | DoubleType | DateType | TimestampType |
-         TimestampNTZType | StringType | BinaryType => true
-    case _: DecimalType => true
-    // variant as its own column (top-level or struct leaf): the vector
-    // is struct-shaped with two binary children (value, metadata) and
-    // ColumnVector.getVariant reads them back
-    case _: VariantType => true
-    case st: StructType => st.fields.forall(f => vectorizableType(f.dataType))
-    case ArrayType(et, _) => vectorizableElement(et)
-    case MapType(kt, vt, _) => vectorizableElement(kt) && vectorizableElement(vt)
-    case _ => false
-  }
-
-  /** Collection ELEMENT types with an append path on the child vector:
-    * atomics, decimals, variants, and nested structs/arrays/maps
-    * thereof — i.e. everything the format can store (round 10 closed
-    * the last gap, variant elements; `vectorize=false` still forces the
-    * row reader for debugging).
-    */
-  private[spark] def vectorizableElement(dt: DataType): Boolean = dt match {
-    case IntegerType | LongType | ShortType | ByteType | BooleanType |
-         FloatType | DoubleType | DateType | TimestampType |
-         TimestampNTZType | StringType | BinaryType => true
-    case _: DecimalType => true
-    case _: VariantType => true
-    case st: StructType => st.fields.forall(f => vectorizableElement(f.dataType))
-    case ArrayType(et, _) => vectorizableElement(et)
-    case MapType(kt, vt, _) => vectorizableElement(kt) && vectorizableElement(vt)
-    case _ => false
   }
 }
 
@@ -478,9 +441,14 @@ class ColumnFileColumnarPartitionReader(
         v.putArray(pos, start, n)
         ()
       }
+    // no value encoding (void, intervals): NULL or absent cells never
+    // reach a writer (writeRow puts the null), a present one fails
     case other =>
-      throw new IllegalStateException(s"non-vectorizable type $other")
+      (_, _, _) => unsupported(other)
   }
+
+  private def unsupported(dt: DataType): Nothing =
+    throw new UnsupportedOperationException(s"columnfile: unsupported type $dt")
 
   // ---- framed-collection parsing helpers ----
 
@@ -654,8 +622,10 @@ class ColumnFileColumnarPartitionReader(
           k += 1
         }
       }
+    // no value encoding: null elements go through appendNullElem, a
+    // present one fails
     case other =>
-      throw new IllegalStateException(s"non-vectorizable element type $other")
+      (_, _, _) => unsupported(other)
   }
 
   /** Append a null ELEMENT to a child vector. Struct children — and

@@ -95,7 +95,6 @@ object SerializableHadoopConf {
   private[spark] def broadcastFor(conf: Configuration)
       : org.apache.spark.broadcast.Broadcast[HadoopConfBytes] = {
     if (conf == null) return null
-    if (sys.env.get("SPARK_GRAFT_CONF_BROADCAST").contains("0")) return null
     val session = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession).orNull
     if (session == null || session.sparkContext.isStopped) return null

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.format.{ColumnDecoder, ColumnFileReader, CorruptColumnFileException, SeekableInput}
+import graft.format.{ColumnFileReader, CorruptColumnFileException, SeekableInput}
 
 /** Range-read input over a Hadoop file (covers local, HDFS, S3A…). */
 final class HadoopSeekableInput(fs: FileSystem, path: Path, len: Long)
@@ -95,13 +95,10 @@ class ColumnFileScanBuilder(
   private var aggResult: Option[AggregatePushdown.Result] = None
   private var limit: Int = -1
 
-  // fail-fast here, not at reader creation: a metadata-only (pushed-
+  // parsed here, not at reader creation: a metadata-only (pushed-
   // aggregate) plan never builds a reader factory, and a typo'd mode
   // must not silently read as fail-fast
-  Option(options.get("onCorrupt")).foreach { v =>
-    require(v == "fail" || v == "skip",
-      s"onCorrupt must be 'fail' or 'skip', got '$v'")
-  }
+  private val scanOptions = ScanOptions.parse(options)
 
   /** Partial limit: each partition reader stops after `limit` rows
     * (Spark still applies the global limit above the scan).
@@ -121,15 +118,15 @@ class ColumnFileScanBuilder(
     // onCorrupt=skip: stats describe bytes that may not decode — a
     // metadata-only COUNT/MIN/MAX would contradict what a scan under
     // skip semantics returns, so aggregates must run on decoded rows
-    else if (Option(options.get("onCorrupt")).contains("skip")) None
+    else if (scanOptions.onCorruptSkip) None
     else if (partitionCols.isEmpty)
       AggregatePushdown.tryCompute(agg, tableSchema, conf, paths,
-        Option(options.get("useManifest")).exists(_.toBoolean))
+        scanOptions.useManifest)
     else
       // GROUP BY <partition cols>: answered per partition directory
       AggregatePushdown.tryComputeGrouped(
         agg, tableSchema, partitionCols, conf, paths,
-        Option(options.get("useManifest")).exists(_.toBoolean))
+        scanOptions.useManifest)
 
   override def pushAggregation(agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
     aggResult = computeAgg(agg)
@@ -161,7 +158,7 @@ class ColumnFileScanBuilder(
     case Some(r) => new PrecomputedAggScan(r.schema, r.rows)
     case None =>
       new ColumnFileScan(paths, tableSchema, requiredSchema, pushed, conf,
-        options, limit, partitionCols)
+        options, scanOptions, limit, partitionCols)
   }
 }
 
@@ -172,6 +169,7 @@ class ColumnFileScan(
     filters: Array[Filter],
     conf: Configuration,
     options: CaseInsensitiveStringMap,
+    scanOptions: ScanOptions,
     limit: Int = -1,
     partitionCols: Seq[String] = Seq.empty)
     extends Scan with Batch with SupportsReportStatistics
@@ -338,7 +336,7 @@ class ColumnFileScan(
     */
   private lazy val manifestPin
       : Map[String, Option[(Seq[ManifestFile.Entry], Option[Seq[String]])]] =
-    if (!useManifest) Map.empty
+    if (!scanOptions.useManifest) Map.empty
     else paths.map(p => p -> ManifestFile.readFull(conf, new Path(p))).toMap
 
   /** The scan's file listing — pinned to [[manifestPin]]'s snapshot
@@ -346,7 +344,7 @@ class ColumnFileScan(
     * [[ColumnFileDataSource.listDataFilesWithRoots]]).
     */
   private def listFiles(): Seq[(Path, org.apache.hadoop.fs.FileStatus)] =
-    if (!useManifest)
+    if (!scanOptions.useManifest)
       ColumnFileDataSource.listDataFilesWithRoots(conf, paths)
     else paths.flatMap { p =>
       val root = new Path(p)
@@ -382,7 +380,7 @@ class ColumnFileScan(
         val stamps = paths.map { p =>
           val root = new Path(p)
           val fromManifest: Option[Seq[String]] =
-            if (useManifest) manifestPin(p).flatMap(_._2) else None
+            if (scanOptions.useManifest) manifestPin(p).flatMap(_._2) else None
           fromManifest match {
             case Some(order) => if (order.isEmpty) None else Some(order)
             case None => SortOrderStamp.read(conf, root)
@@ -446,8 +444,7 @@ class ColumnFileScan(
     def lt(a: Any, b: Any): Boolean = cmp(a, b).exists(_ < 0)
     def eqv(a: Any, b: Any): Boolean = cmp(a, b).contains(0)
     val files = listFiles()
-    val maxBytes = Option(options.get("maxPartitionBytes"))
-      .map(_.toLong).getOrElse(128L * 1024 * 1024)
+    val maxBytes = scanOptions.maxPartitionBytes
     def fail(st: org.apache.hadoop.fs.FileStatus, why: String): Nothing =
       throw new IllegalArgumentException(
         s"columnfile: orderedBy=${cols.head} declaration is NOT " +
@@ -538,54 +535,23 @@ class ColumnFileScan(
 
   private def allFilters: Array[Filter] = filters ++ runtimeFilters
 
-  /** Per-chunk layout of one file: (headerOffset, dataSize, stats).
-    * Planned from the stats sidecar ALONE when it records chunk offsets
-    * and a file length matching the listing (one tiny sidecar read, no
-    * data-file open — the staleness guard costs nothing because the
-    * FileStatus is already in hand); otherwise falls back to the
-    * reference-style chunk-header walk.
-    */
-  // One layout resolution per file per query: estimateStatistics and
-  // planInputPartitions both need it, and the Scan instance is scoped to
-  // a single query, so memoizing is safe and halves the metadata reads.
+  // One layout resolution (ColumnFileScan.chunkLayout) per file per
+  // query: estimateStatistics and planInputPartitions both need it, and
+  // the Scan instance is scoped to a single query, so memoizing is safe
+  // and halves the metadata reads.
   private val layoutCache =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, Long, Option[ChunkStatsIndex.ChunkStats])]]()
 
   private def chunkLayout(
       st: org.apache.hadoop.fs.FileStatus): Seq[(Long, Long, Option[ChunkStatsIndex.ChunkStats])] =
-    layoutCache.computeIfAbsent(st.getPath.toString, _ => chunkLayoutUncached(st))
-
-  private def chunkLayoutUncached(
-      st: org.apache.hadoop.fs.FileStatus): Seq[(Long, Long, Option[ChunkStatsIndex.ChunkStats])] = {
-    val sidecar = ChunkStatsIndex.readWithLen(conf, st.getPath)
-    sidecar match {
-      case Some((len, ss)) if len == st.getLen &&
-          ss.forall(c => c.off >= 0 && c.bytes >= 0) =>
-        ss.map(c => (c.off, c.bytes, Some(c)))
-      case _ =>
-        val in = new HadoopSeekableInput(
-          st.getPath.getFileSystem(conf), st.getPath, st.getLen)
-        try {
-          val chunks = ColumnFileReader.scanChunks(in)
-          val stats = sidecar.map(_._2).filter(_.length == chunks.length)
-          chunks.zipWithIndex.map { case (c, i) =>
-            (c.headerOffset, c.dataSize, stats.map(_(i)))
-          }
-        } finally in.close()
-    }
-  }
+    layoutCache.computeIfAbsent(st.getPath.toString,
+      _ => ColumnFileScan.chunkLayout(conf, st.getPath, st.getLen))
 
   /** Size/row estimates for the planner (drives broadcast-join choice
     * for columnfile tables): compressed bytes + rows from the stats
     * sidecars (header walk only for sidecar-less files, parallel across
     * files).
     */
-  /** `useManifest=true`: plan from `_manifest.json` instead of walking
-    * directories — zero listing RPCs (see [[ManifestFile]] trust model).
-    */
-  private def useManifest: Boolean =
-    Option(options.get("useManifest")).exists(_.toBoolean)
-
   override def estimateStatistics(): Statistics = {
     val files = listFiles().map(_._2)
     val layouts = ColumnFileDataSource.mapFilesParallel(files)(chunkLayout)
@@ -607,7 +573,7 @@ class ColumnFileScan(
   override def toMicroBatchStream(
       checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new ColumnFileMicroBatchStream(
-      paths, tableSchema, filters, conf, checkpointLocation, useManifest,
+      paths, tableSchema, filters, conf, checkpointLocation, scanOptions.useManifest,
       positiveOption("maxFilesPerTrigger", _.toInt),
       positiveOption("maxBytesPerTrigger", _.toLong))
 
@@ -658,8 +624,7 @@ class ColumnFileScan(
   }
 
   private def doPlanInputPartitions(): Array[InputPartition] = {
-    val maxBytes = Option(options.get("maxPartitionBytes"))
-      .map(_.toLong).getOrElse(128L * 1024 * 1024)
+    val maxBytes = scanOptions.maxPartitionBytes
     val partSet = partitionCols.toSet
     val partSchema = StructType(
       partitionCols.map(c => tableSchema(tableSchema.fieldIndex(c))))
@@ -736,37 +701,79 @@ class ColumnFileScan(
   override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
     ScanMetrics.all
 
-  /** `onCorrupt=skip` drops chunks whose DECODE proves corrupt (clean
-    * `CorruptColumnFileException`s only) instead of failing the task,
-    * counting them in the `cfCorruptChunks` metric — the 100 TB
-    * backfill-over-aging-storage trade, opt-in and observable, never
-    * silent. Planning corruption (a file whose chunk walk fails, absent
-    * a sidecar) still fails: there is no row boundary to resume at.
-    */
-  private def onCorruptSkip: Boolean =
-    Option(options.get("onCorrupt")) match {
-      case None | Some("fail") => false
-      case Some("skip")        => true
-      case Some(other) => throw new IllegalArgumentException(
-        s"onCorrupt must be 'fail' or 'skip', got '$other'")
-    }
-
-  /** `vectorize=false` forces the row reader (the Parquet
-    * `enableVectorizedReader` analog): an escape hatch for debugging a
-    * suspect batched read against the row path's answer, and the hook
-    * tests use to keep covering the row reader now that every
-    * non-variant projection vectorizes.
-    */
-  private def vectorizeEnabled: Boolean =
-    Option(options.get("vectorize")).forall(_.toBoolean)
-
   override def createReaderFactory(): PartitionReaderFactory =
     new ColumnFileReaderFactory(
       tableSchema.json, requiredSchema.json, allFilters,
       new SerializableHadoopConf(conf), limit, partitionCols,
-      onCorruptSkip, vectorizeEnabled)
+      scanOptions.onCorruptSkip)
 }
 
+object ColumnFileScan {
+
+  /** Per-chunk layout of one file: (headerOffset, dataSize, stats).
+    * Planned from the stats sidecar ALONE when it records chunk offsets
+    * and a file length matching `len` (one tiny sidecar read, no
+    * data-file open — the staleness guard costs nothing because the
+    * length is already in hand from the listing or the stream's batch
+    * log); otherwise falls back to the reference-style chunk-header
+    * walk. Shared by batch planning and the streaming source.
+    */
+  def chunkLayout(conf: Configuration, path: Path, len: Long)
+      : Seq[(Long, Long, Option[ChunkStatsIndex.ChunkStats])] = {
+    val sidecar = ChunkStatsIndex.readWithLen(conf, path)
+    sidecar match {
+      case Some((slen, ss)) if slen == len &&
+          ss.forall(c => c.off >= 0 && c.bytes >= 0) =>
+        ss.map(c => (c.off, c.bytes, Some(c)))
+      case _ =>
+        val in = new HadoopSeekableInput(path.getFileSystem(conf), path, len)
+        try {
+          val chunks = ColumnFileReader.scanChunks(in)
+          val stats = sidecar.map(_._2).filter(_.length == chunks.length)
+          chunks.zipWithIndex.map { case (c, i) =>
+            (c.headerOffset, c.dataSize, stats.map(_(i)))
+          }
+        } finally in.close()
+    }
+  }
+}
+
+/** The read options the scan acts on, parsed once per scan builder so
+  * every consumer sees one value and one error message:
+  *
+  *  - `onCorrupt=skip` drops chunks whose DECODE proves corrupt (clean
+  *    `CorruptColumnFileException`s only) instead of failing the task,
+  *    counting them in the `cfCorruptChunks` metric — the 100 TB
+  *    backfill-over-aging-storage trade, opt-in and observable, never
+  *    silent. Planning corruption (a file whose chunk walk fails, absent
+  *    a sidecar) still fails: there is no row boundary to resume at.
+  *  - `useManifest=true` plans from `_manifest.json` instead of walking
+  *    directories — zero listing RPCs (see [[ManifestFile]] trust model).
+  *  - `maxPartitionBytes` (default 128 MiB) caps the chunk bytes packed
+  *    into one input partition.
+  */
+final case class ScanOptions(
+    onCorruptSkip: Boolean,
+    useManifest: Boolean,
+    maxPartitionBytes: Long)
+
+object ScanOptions {
+  def parse(options: CaseInsensitiveStringMap): ScanOptions = ScanOptions(
+    onCorruptSkip = Option(options.get("onCorrupt")) match {
+      case None | Some("fail") => false
+      case Some("skip")        => true
+      case Some(other) => throw new IllegalArgumentException(
+        s"onCorrupt must be 'fail' or 'skip', got '$other'")
+    },
+    useManifest = Option(options.get("useManifest")).exists(_.toBoolean),
+    maxPartitionBytes = Option(options.get("maxPartitionBytes"))
+      .map(_.toLong).getOrElse(128L * 1024 * 1024))
+}
+
+/** Every scan reads through [[ColumnFileColumnarPartitionReader]], which
+  * batches every type the cell codec can store; Spark never calls the
+  * row-based `createReader` once `supportColumnarReads` holds.
+  */
 class ColumnFileReaderFactory(
     tableSchemaJson: String,
     requiredSchemaJson: String,
@@ -774,8 +781,7 @@ class ColumnFileReaderFactory(
     conf: SerializableHadoopConf,
     limit: Int = -1,
     partitionCols: Seq[String] = Seq.empty,
-    onCorruptSkip: Boolean = false,
-    vectorize: Boolean = true)
+    onCorruptSkip: Boolean = false)
     extends PartitionReaderFactory {
 
   @transient private lazy val tableSchema =
@@ -789,14 +795,7 @@ class ColumnFileReaderFactory(
   @transient private lazy val dataRequiredSchema =
     StructType(requiredSchema.fields.filterNot(f => partSet(f.name)))
 
-  /** Vectorized for every projection except variant ELEMENTS inside
-    * collections — atomics, decimals, variants-as-columns, structs,
-    * arrays, maps, and nested combinations all batch; see
-    * ColumnFileColumnarReader.vectorizable. `vectorize=false` opts a
-    * read out entirely.
-    */
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    vectorize && ColumnFileColumnarReader.vectorizable(requiredSchema)
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
   /** Per-required-field source: Right(dataOrdinal) or Left(constant
     * Catalyst value parsed from the partition's directory values).
@@ -826,43 +825,8 @@ class ColumnFileReaderFactory(
       inner, requiredSchema, fieldSources(p))
   }
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[CfPartition]
-    val inner = new ColumnFilePartitionReader(
-      p, dataTableSchema, dataRequiredSchema, filters, conf.conf, limit,
-      onCorruptSkip)
-    if (partitionCols.isEmpty ||
-        requiredSchema.fields.forall(f => !partSet(f.name))) inner
-    else new PartitionConstantRowReader(inner, fieldSources(p),
-      dataRequiredSchema.fields.map(_.dataType))
-  }
-}
-
-/** Merges constant partition values into each row at their required
-  * ordinals (values parse once per task, not per row).
-  */
-class PartitionConstantRowReader(
-    inner: PartitionReader[InternalRow],
-    sources: Array[Either[Any, Int]],
-    dataTypes: Array[DataType])
-    extends PartitionReader[InternalRow] {
-  override def next(): Boolean = inner.next()
-  override def get(): InternalRow = {
-    val dataRow = inner.get()
-    val out = new Array[Any](sources.length)
-    var i = 0
-    while (i < sources.length) {
-      out(i) = sources(i) match {
-        case Right(o) =>
-          if (dataRow.isNullAt(o)) null else dataRow.get(o, dataTypes(o))
-        case Left(c) => c
-      }
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(out)
-  }
-  override def close(): Unit = inner.close()
-  override def currentMetricsValues() = inner.currentMetricsValues()
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("columnfile scans are columnar-only")
 }
 
 /** Wraps data batches with constant partition-column vectors. */
@@ -913,189 +877,4 @@ class PartitionConstantColumnarReader(
     inner.close()
   }
   override def currentMetricsValues() = inner.currentMetricsValues()
-}
-
-/** Reads the chunks of one partition with projection pushdown, filter
-  * evaluation, and chunk skipping:
-  *
-  *  1. decode only the filter columns of a chunk;
-  *  2. if no row survives, the remaining selected columns of that chunk
-  *     are never read or decompressed (late materialization — reference:
-  *     src/columnfile-select.cc:90-176);
-  *  3. otherwise decode the selected columns, skipping non-survivor runs.
-  */
-class ColumnFilePartitionReader(
-    partition: CfPartition,
-    tableSchema: StructType,
-    requiredSchema: StructType,
-    filters: Array[Filter],
-    conf: Configuration,
-    limit: Int = -1,
-    onCorruptSkip: Boolean = false)
-    extends PartitionReader[InternalRow] {
-
-  private var emitted = 0L
-  private[spark] val metrics = new ScanMetrics.Task
-  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    metrics.current
-
-  private val allLeaves = CellCodec.flatten(tableSchema)
-  private val leafIndexByName: Map[String, Int] =
-    allLeaves.zipWithIndex.map { case (l, i) => (l.name, i) }.toMap
-
-  // Physical columns needed for output (in required-schema leaf order).
-  private val outLeaves: IndexedSeq[(Int, CellCodec.Leaf)] =
-    CellCodec.flatten(requiredSchema).map { l =>
-      val idx = leafIndexByName.getOrElse(l.name,
-        throw new IllegalArgumentException(s"unknown column ${l.name}"))
-      (idx, allLeaves(idx))
-    }
-
-  // Filter evaluators, grouped by the physical column they touch.
-  private val filterEvals: Array[FilterEval.Bound] =
-    filters.flatMap(f => FilterEval.bind(f, tableSchema, leafIndexByName))
-  private val filterCols: Array[Int] = filterEvals.map(_.col).distinct.sorted
-
-  private val path = new Path(partition.filePath)
-  private val input = new HadoopSeekableInput(
-    path.getFileSystem(conf), path, partition.fileLen)
-
-  private var chunkIdx = 0
-  private var rows: Iterator[InternalRow] = Iterator.empty
-  private var current: InternalRow = _
-
-  /** Re-throws unless permissive; permissive counts the chunk and the
-    * caller drops the REST of it (rows already emitted from the chunk
-    * before the corrupt point stand — best-effort salvage, documented).
-    */
-  private def corruptChunk(e: CorruptColumnFileException): Unit = {
-    if (!onCorruptSkip) throw e
-    metrics.corruptChunks += 1
-  }
-
-  override def next(): Boolean = {
-    if (limit >= 0 && emitted >= limit) return false
-    while (true) {
-      val has =
-        try rows.hasNext
-        catch { case e: CorruptColumnFileException =>
-          corruptChunk(e); rows = Iterator.empty; false }
-      if (has) {
-        try {
-          current = rows.next()
-          emitted += 1
-          return true
-        } catch { case e: CorruptColumnFileException =>
-          corruptChunk(e); rows = Iterator.empty }
-      } else {
-        if (chunkIdx >= partition.chunkOffsets.length) return false
-        rows =
-          try openChunk(chunkIdx)
-          catch { case e: CorruptColumnFileException =>
-            corruptChunk(e); Iterator.empty }
-        chunkIdx += 1
-      }
-    }
-    false
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = input.close()
-
-  private def openChunk(idx: Int): Iterator[InternalRow] = {
-    val info = ColumnFileReader.readChunkHeader(
-      input, partition.chunkOffsets(idx), partition.fileLen)
-
-    /** Exact chunk row count: from the sidecar (free) when planned with
-      * one, else an exact decode-walk count (foreign sidecar-less files
-      * only). Makes results projection-independent on ragged chunks —
-      * a chunk always yields its true row count, null-padding columns
-      * that end early (reference row assembly zips until ALL columns
-      * are exhausted, src/columnfile-reader.cc:416-445).
-      */
-    lazy val exactRows: Int = {
-      val known = partition.knownRows(idx)
-      if (known >= 0) known.toInt
-      else ColumnFileReader.countRows(input, info)
-    }
-
-    // Pass 1: decode filter columns only; build the survivor bitmap.
-    var survivors: java.util.BitSet = null
-    val rowCount = exactRows
-    if (filterCols.nonEmpty) {
-      val wanted = new java.util.HashSet[Integer]()
-      filterCols.foreach(c => wanted.add(c))
-      val decoders = ColumnFileReader.openChunk(input, info, wanted)
-      // dictionary-aware shared pass: predicates evaluate once per dict
-      // entry on dict-encoded columns, and an unsatisfiable filter skips
-      // the chunk before the row loop
-      survivors = FilterEval.survivorBitmap(decoders, filterEvals, rowCount)
-      if (survivors.isEmpty) {
-        metrics.chunksSkipped += 1
-        return Iterator.empty // chunk skipped
-      }
-    }
-
-    // Pass 2: decode the output columns.
-    metrics.chunksRead += 1
-    metrics.decodedBytes += info.fields.iterator.map(_._2).sum
-    val neededCols = outLeaves.map(_._1)
-    val wanted = new java.util.HashSet[Integer]()
-    neededCols.foreach(c => wanted.add(c))
-    val decoders = ColumnFileReader.openChunk(input, info, wanted)
-    val decoderByCol: Map[Int, ColumnDecoder] = decoders.toMap
-
-    if (neededCols.isEmpty) {
-      // Projection is empty (e.g. residual count): survivors if filtered,
-      // else the exact chunk row count.
-      val n = if (survivors != null) survivors.cardinality() else rowCount
-      return Iterator.fill(n)(InternalRow.empty)
-    }
-
-    val colDecoders: IndexedSeq[ColumnDecoder] =
-      outLeaves.map { case (c, _) => decoderByCol.getOrElse(c, null) }
-
-    // Cells arrive in required-schema leaf order, which is exactly the
-    // order CellCodec.assemble consumes them in.
-    def assembleRow(): InternalRow = {
-      val reqCells = new Array[Array[Byte]](outLeaves.length)
-      var i = 0
-      while (i < outLeaves.length) {
-        val dec = colDecoders(i)
-        reqCells(i) = if (dec != null && dec.hasNext) dec.next() else null
-        i += 1
-      }
-      CellCodec.assemble(requiredSchema, reqCells)
-    }
-
-    if (survivors == null) {
-      // Unfiltered scan: exactly rowCount rows, null-padding short columns.
-      new Iterator[InternalRow] {
-        private var row = 0
-        override def hasNext: Boolean = row < rowCount
-        override def next(): InternalRow = { row += 1; assembleRow() }
-      }
-    } else {
-      val bitmap = survivors
-      val total = rowCount
-      new Iterator[InternalRow] {
-        private var row = 0
-        private def advanceToSurvivor(): Unit = {
-          val nxt = bitmap.nextSetBit(row)
-          val target = if (nxt < 0) total else nxt
-          if (target > row) {
-            val skip = (target - row).toLong
-            colDecoders.foreach(d => if (d != null && d.hasNext) d.skip(skip))
-            row = target
-          }
-        }
-        override def hasNext: Boolean = { advanceToSurvivor(); row < total }
-        override def next(): InternalRow = {
-          advanceToSurvivor()
-          row += 1
-          assembleRow()
-        }
-      }
-    }
-  }
 }

@@ -293,25 +293,17 @@ class ColumnFileMicroBatchStream(
     val hi = end.asInstanceOf[ColumnFileOffset].batches
     val files: Seq[(Path, Long)] = (lo until hi)
       .flatMap(readBatch).map { case (p, len) => (new Path(p), len) }
-    // chunk offsets from the stats sidecar when present (no data-file
-    // open per micro-batch), header walk otherwise; parallel across the
-    // batch's new files
+    // the batch scan's layout resolver (stats sidecar when present, no
+    // data-file open per micro-batch; header walk otherwise), parallel
+    // across the batch's new files; one partition per file, unpruned
     ColumnFileDataSource.mapFilesParallel(files) { case (path, len) =>
-      val (offsets, rows): (Array[Long], Array[Long]) =
-        ChunkStatsIndex.readWithLen(conf, path) match {
-          case Some((slen, ss)) if slen == len &&
-              ss.forall(c => c.off >= 0 && c.bytes >= 0) =>
-            (ss.map(_.off).toArray, ss.map(_.rows).toArray)
-          case _ =>
-            val in = new HadoopSeekableInput(
-              path.getFileSystem(conf), path, len)
-            try (graft.format.ColumnFileReader.scanChunks(in)
-              .map(_.headerOffset).toArray, Array.empty[Long])
-            finally in.close()
-        }
-      if (offsets.isEmpty) None
-      else Some(ColumnFilePartition(path.toString, len, offsets,
-        Array.empty, rows))
+      val layout = ColumnFileScan.chunkLayout(conf, path, len)
+      val rows =
+        if (layout.forall(_._3.isDefined)) layout.map(_._3.get.rows).toArray
+        else Array.empty[Long]
+      if (layout.isEmpty) None
+      else Some(ColumnFilePartition(path.toString, len,
+        layout.map(_._1).toArray, Array.empty, rows))
     }.flatten.toArray
   }
 

@@ -60,7 +60,7 @@ class BitpackEncodingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val plain = spark.read.format("columnfile").load(plainDir)
     val packed = spark.read.format("columnfile").load(packedDir)
 
-    // full-row equality, all columns (columnar/vectorized read path)
+    // full-row equality, all columns
     assert(packed.exceptAll(plain).count() == 0)
     assert(plain.exceptAll(packed).count() == 0)
 
@@ -75,14 +75,6 @@ class BitpackEncodingSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(packed.filter(p).count() == plain.filter(p).count(), p.toString)
     }
 
-    // row reader path: forced explicitly (every non-variant projection
-    // vectorizes, so the escape hatch is the only way to exercise it)
-    val viaRows = spark.read.format("columnfile")
-      .option("vectorize", "false").load(packedDir)
-    assert(!viaRows.select("id", "bucket").queryExecution.executedPlan
-      .toString.contains("ColumnarToRow"))
-    assert(viaRows.agg(sum("id"), sum("bucket")).head.toSeq ==
-      plain.agg(sum("id"), sum("bucket")).head.toSeq)
     df.unpersist()
   }
 

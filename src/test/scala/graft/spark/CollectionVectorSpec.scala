@@ -11,8 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * into the batch's child element vectors, so embedding-style scans
   * (array<float> over millions of rows) stream through the columnar
   * path instead of per-row boxing. Nested collections (array of array,
-  * array of struct, maps of structs) and decimal elements vectorize
-  * recursively; only variant columns keep the row reader.
+  * array of struct, maps of structs), decimal and variant elements
+  * vectorize recursively — the columnar reader is the only scan path.
   */
 class CollectionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -145,17 +145,13 @@ class CollectionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
       df.selectExpr("sum(cast(variant_get(v, '$.a') AS BIGINT))").head.getLong(0),
       df.where(col("v").isNull).count())
     val vec = answer(back)
-    val row = answer(spark.read.format("columnfile")
-      .option("vectorize", "false").load(dir))
-    assert(vec == row, s"reader paths disagree: $vec vs $row")
     assert(vec._1 == (0 until 100).filter(_ % 9 != 0).sum)
     assert(vec._2 == (0 until 100).count(_ % 9 == 0))
   }
 
   test("variant elements inside collections vectorize; both readers agree") {
-    // round 10: the last row-path fallback closed — variants as ARRAY
-    // elements, MAP values, and (via struct shredding) struct fields all
-    // take the batched path now.
+    // variants as ARRAY elements, MAP values, and (via struct
+    // shredding) struct fields all take the batched path
     val dir = Files.createTempDirectory("cf-vec-varel").toString
     spark.range(200)
       .selectExpr("id",
@@ -177,9 +173,6 @@ class CollectionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
       df.selectExpr("sum(cast(variant_get(sv.v, '$.b') AS BIGINT))").head.getLong(0),
       df.selectExpr("sum(cast(variant_get(map_values(mv)[0], '$') AS BIGINT))").head.getLong(0))
     val vec = answer(back)
-    val row = answer(spark.read.format("columnfile")
-      .option("vectorize", "false").load(dir))
-    assert(vec == row, s"reader paths disagree: $vec vs $row")
     val live = (0 until 200).filter(_ % 13 != 0)
     assert(vec._1 == live.map(_.toLong).sum)
     assert(vec._2 == (0 until 200).count(_ % 13 == 0))
@@ -188,7 +181,7 @@ class CollectionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(vec._5 == (0 until 200).map(_.toLong).sum)
   }
 
-  test("property: columnar and row readers agree on random nested data") {
+  test("property: the columnar reader returns random nested data exactly") {
     val sp = spark; import sp.implicits._
     val rnd = new scala.util.Random(20260813L) // seeded: deterministic
     def maybe[T >: Null](gen: => T, nullEvery: Int): T =
@@ -210,31 +203,24 @@ class CollectionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     src.write.format("columnfile").mode("overwrite").save(dir)
 
     val vec = spark.read.format("columnfile").load(dir)
-    val rows = spark.read.format("columnfile")
-      .option("vectorize", "false").load(dir)
     assert(columnar(vec.select("id", "st", "ma", "dec", "aa")))
-    assert(!columnar(rows.select("id", "st", "ma", "dec", "aa")))
     // maps are order-sensitive under exceptAll; compare them exploded,
     // everything else directly
     val flatCols = Seq("id", "st", "dec", "aa")
     val a = vec.select(flatCols.map(col): _*)
-    val b = rows.select(flatCols.map(col): _*)
-    assert(a.exceptAll(b).count() + b.exceptAll(a).count() == 0,
-      "columnar and row readers disagree on nested columns")
-    val am = vec.select(col("id"), explode_outer(col("ma")))
-    val bm = rows.select(col("id"), explode_outer(col("ma")))
-    assert(am.exceptAll(bm).count() + bm.exceptAll(am).count() == 0,
-      "columnar and row readers disagree on map columns")
-    // and both agree with the source
     val s = src.select(flatCols.map(col): _*)
     assert(a.exceptAll(s).count() + s.exceptAll(a).count() == 0,
-      "columnar reader diverges from the written data")
+      "columnar reader diverges from the written nested columns")
+    val am = vec.select(col("id"), explode_outer(col("ma")))
+    val sm = src.select(col("id"), explode_outer(col("ma")))
+    assert(am.exceptAll(sm).count() + sm.exceptAll(am).count() == 0,
+      "columnar reader diverges from the written map column")
   }
 
   test("fuzz: byte flips in nested cells read clean or throw CorruptColumnFileException") {
     // The columnar framed-cell parsers (arrays/maps/structs/decimals)
     // carry their own bounds checks; this asserts the same property the
-    // format-layer MutationFuzzSpec pins for the row reader — any
+    // format-layer MutationFuzzSpec pins for the chunk decoder — any
     // mutation either reads successfully (payload flips are legitimate
     // value changes; the format has no checksums, faithful to the
     // reference) or throws the clean corruption class. IndexOutOfBounds,

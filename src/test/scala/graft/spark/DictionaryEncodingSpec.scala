@@ -9,9 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** `dictionary=true` write option end to end: categorical string/binary
   * columns store a per-chunk value table + id runs. Reads are transparent
-  * (the columnar path uses the vector-dictionary fast path; the row path
-  * maps ids in the decoder), filters/pushdown/stats behave identically,
-  * and the file shrinks on categorical data.
+  * (dictionary ids land in the column vectors as-is — the
+  * vector-dictionary fast path), filters/pushdown/stats behave
+  * identically, and the file shrinks on categorical data.
   */
 class DictionaryEncodingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -74,21 +74,18 @@ class DictionaryEncodingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(agg.head.toSeq == Seq(5000L, 0L, 4999L))
   }
 
-  test("row reader path (vectorize=false) maps dictionary ids too") {
+  test("nested projections map dictionary ids too") {
     val sp = spark; import sp.implicits._
-    val dir = Files.createTempDirectory("cf-dict-row").toString
+    val dir = Files.createTempDirectory("cf-dict-nested").toString
     (0 until 1000).map(i =>
         (i.toLong, langs(i % langs.length), Seq(Seq(i.toLong, i + 1L))))
       .toDF("id", "lang", "aa")
       .write.format("columnfile").option("dictionary", "true")
       .mode("overwrite").save(dir)
-    // nested projections vectorize now, so the row path is forced
-    // explicitly via the vectorize=false escape hatch
-    val back = spark.read.format("columnfile")
-      .option("vectorize", "false").load(dir)
+    val back = spark.read.format("columnfile").load(dir)
     val proj = back.select("id", "lang", "aa")
-    assert(!proj.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-      "vectorize=false must force the row reader")
+    assert(proj.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
+      "a nested projection must read through the columnar reader")
     val got = proj.filter(col("lang") === "fr").collect()
     assert(got.length == (0 until 1000).count(i => langs(i % langs.length) == "fr"))
     assert(got.forall(r => r.getSeq[Seq[Long]](2) ==

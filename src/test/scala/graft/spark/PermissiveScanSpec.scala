@@ -80,20 +80,19 @@ class PermissiveScanSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("onCorrupt=skip drops exactly the corrupt chunk (columnar path)") {
     val (dir, total, victimRows) = corruptedTable()
     val df = spark.read.format("columnfile").option("onCorrupt", "skip")
-      .load(dir).select("id", "v") // flat projection -> columnar reader
+      .load(dir).select("id", "v")
     assert(df.count() == total - victimRows)
     // surviving rows decode correctly around the hole
     assert(df.agg(min("id"), max("id")).collect()(0).toSeq ==
       Seq(0L, 19999L))
   }
 
-  test("onCorrupt=skip drops exactly the corrupt chunk (row path)") {
+  test("onCorrupt=skip drops exactly the corrupt chunk (nested projection)") {
     val (dir, total, victimRows) = corruptedTable()
-    // nested projections vectorize now; force the row reader explicitly
     val df = spark.read.format("columnfile").option("onCorrupt", "skip")
-      .option("vectorize", "false").load(dir).select("id", "aa")
-    assert(!df.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-      "vectorize=false must force the row reader")
+      .load(dir).select("id", "aa")
+    assert(df.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
+      "a nested projection must read through the columnar reader")
     assert(df.count() == total - victimRows)
     assert(df.where(size(col("aa")) =!= 1).count() == 0)
   }
